@@ -15,6 +15,31 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def cc_both_sides(edges, **kwargs) -> list:
+    """Sorted ``connected_components(edges)`` rows, computed on both sides
+    of its size gate: the driver bound forced above every edge count
+    (driver union-find) and below every edge count, the empty graph
+    included (distributed min-label loop). Asserts both sides give the
+    same rows and ``bigint`` columns."""
+    from kafka_topic_analyzer_spark.operators import dedup as D
+
+    sides = []
+    for bound in (1 << 62, -1):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(D, "CC_DRIVER_MAX_EDGES", bound)
+            df = D.connected_components(edges, **kwargs)
+            sides.append(
+                (
+                    [f.dataType.simpleString() for f in df.schema.fields],
+                    sorted(tuple(r) for r in df.collect()),
+                )
+            )
+    assert sides[0] == sides[1], sides
+    types, rows = sides[0]
+    assert types == ["bigint", "bigint"]
+    return rows
+
+
 @pytest.fixture(scope="session")
 def spark():
     import os

@@ -12,7 +12,8 @@ hypothesis-generated inputs, NULLs included:
 - ``range_join_binned`` vs the O(n*m) nested loop over the exact
   ``start <= p < end`` predicate (each match exactly once).
 - both connected-components implementations vs union-find (this run found
-  the star variant dropping self-loop-only vertices).
+  the star variant dropping self-loop-only vertices), min-label
+  propagation on both sides of its driver size gate.
 - ``salted_equi_join`` vs the plain join for every big-side-preserving
   join type.
 - ``compacted_state`` vs a literal log replay (the reference engine's
@@ -31,6 +32,8 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from conftest import cc_both_sides
 
 KEYS = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
 TS = st.one_of(st.none(), st.integers(min_value=0, max_value=20))
@@ -177,18 +180,16 @@ def test_connected_components_match_union_find(spark, edges):
     large-star/small-star variant) must converge to the same fixpoint a
     driver-side union-find computes — self-loops, duplicate edges,
     chains, and the empty graph included."""
-    from kafka_topic_analyzer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from kafka_topic_analyzer_spark.operators.dedup import connected_components_star
 
     edf = spark.createDataFrame(edges or [], "src long, dst long")
     want = _reference_components(edges)
-    for impl in (connected_components, connected_components_star):
-        got = sorted(
-            (r["doc_id"], r["cluster_id"]) for r in impl(edf).collect()
-        )
-        assert got == want, impl.__name__
+    # min-label propagation on both sides of its driver size gate
+    assert cc_both_sides(edf) == want
+    got = sorted(
+        (r["doc_id"], r["cluster_id"]) for r in connected_components_star(edf).collect()
+    )
+    assert got == want
 
 
 BIG_ROWS = st.lists(

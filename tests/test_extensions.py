@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cc_both_sides
 
 
 @pytest.fixture(scope="module")
@@ -70,13 +70,11 @@ def test_approx_quantiles_rank_error_bound(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
-    from kafka_topic_analyzer_spark.operators.dedup import connected_components
-
     # chain 1-2-3-4 (diameter 3, forces >1 propagation round) + island 10-11
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
+    got = dict(cc_both_sides(edges))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 

@@ -3,7 +3,8 @@
 1. connected_components' observe-based convergence (label-sum
    monotonicity) on graphs that need MULTIPLE two-hop batches, and on
    the empty graph — the two shapes where a broken convergence rule
-   would either under-iterate (wrong labels) or loop to max_iterations.
+   would either under-iterate (wrong labels) or loop to max_iterations
+   — on both sides of its driver size gate.
 2. Retention-grace vacuum (reader-contract shape (b)) for BOTH manifest
    stores: a DataFrame resolved against a superseded manifest still
    scans while the window holds, and dirs beyond the window are still
@@ -16,7 +17,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, cc_both_sides
 from kafka_topic_analyzer_spark.functions.vectors import as_double
 from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
 from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
@@ -28,30 +29,20 @@ def test_cc_long_chain_needs_multiple_batches(spark):
     several times before the label sum stops moving. Every vertex must
     end labeled 0 (the min id) — an early-stopping bug would leave
     higher labels in the tail of the chain."""
-    from kafka_topic_analyzer_spark.operators.dedup import connected_components
-
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "src long, dst long"
     )
-    got = {
-        (r["doc_id"], r["cluster_id"]) for r in connected_components(edges).collect()
-    }
-    assert got == {(i, 0) for i in range(10)}
+    assert cc_both_sides(edges) == [(i, 0) for i in range(10)]
 
 
 def test_cc_two_cliques_and_empty_graph(spark):
-    from kafka_topic_analyzer_spark.operators.dedup import connected_components
-
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12)], "src long, dst long"
     )
-    got = {
-        (r["doc_id"], r["cluster_id"]) for r in connected_components(edges).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)}
+    assert cc_both_sides(edges) == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)]
 
     empty = spark.createDataFrame([], "src long, dst long")
-    assert connected_components(empty).collect() == []
+    assert cc_both_sides(empty) == []
 
 
 def _emb_base(spark):
